@@ -1132,7 +1132,7 @@ def txlog_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     read nets both transports through the same scan: files with vectors
     drop their dead rows via one broadcast anti-join on
     ``(_metadata.file_path, _metadata.row_index)``
-    (:func:`txlog._scan_files_with_dvs`); rewritten and untouched files
+    (:meth:`txlog.Snapshot.scan`); rewritten and untouched files
     scan plain. The gate verifies a vector actually landed (RuntimeError
     otherwise) and returns the tip state; the oracle recomputes it
     relationally from the raw change events.
@@ -1168,8 +1168,7 @@ def txlog_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats_cols=["id"],
         dv_fraction_threshold=0.25,
     )
-    acts, _, _, _ = txlog._resolve(tdir, None)
-    if not txlog._dv_map(acts):
+    if not txlog.snapshot(tdir).dvs:
         raise RuntimeError(
             "trickle delete did not produce a deletion vector — the "
             "merge-on-read path was not exercised"

@@ -43,11 +43,15 @@ log of add/remove file actions, folded into a snapshot):
   :func:`last_txn` before applying, so the at-least-once replay Spark
   gives after a failure (or a checkpoint reset) becomes a no-op — the
   Delta ``txn`` action that upgrades foreachBatch to exactly-once.
-- **Log checkpoints.** :func:`write_checkpoint` materializes the fold
-  at version ``N`` (Delta's ``_last_checkpoint``); later snapshot
-  resolutions start from the newest checkpoint at or below the target
-  version and replay only the tail, so the driver-side fold stays
-  O(commits since last checkpoint) no matter how long the table lives.
+- **One fold per operation; log checkpoints bound its tail.** Every
+  entry point folds the log ONCE into a :class:`Snapshot` (live add
+  actions, txn marks, metadata, version) and hands it down — file
+  listing, data skipping and the DV-aware scan are its methods, so no
+  operation re-reads a commit file. :func:`write_checkpoint`
+  materializes the fold at version ``N`` (Delta's ``_last_checkpoint``);
+  a fold starts from the newest checkpoint at or below its target and
+  replays only the tail, so it stays O(commits since last checkpoint)
+  no matter how long the table lives.
 - **File-level data skipping.** An ``add`` action may carry per-file
   min/max column stats (Delta's ``stats`` field, which production
   writers lift from parquet footers); :func:`snapshot_files` with a
@@ -61,7 +65,7 @@ log of add/remove file actions, folded into a snapshot):
   file's deleted fraction is small (``dv_fraction_threshold``), making
   trickle deletes O(deleted rows) of sidecar instead of O(touched
   files) of rewrite; every reader applies the vectors with one
-  broadcast anti-join at scan time (:func:`_scan_files_with_dvs`), any
+  broadcast anti-join at scan time (:meth:`Snapshot.scan`), any
   rewrite (DML, compaction/OPTIMIZE) reconciles them into plain files,
   and :func:`vacuum` reclaims unreferenced sidecars like data files.
 
@@ -79,6 +83,7 @@ import json
 import logging
 import os
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -93,17 +98,34 @@ def _log_dir(table_dir: str) -> str:
     return os.path.join(table_dir, _LOG_SUBDIR)
 
 
-def latest_version(table_dir: str) -> int:
-    """Highest committed version, or -1 for an empty/absent log."""
+def _log_entries(table_dir: str) -> tuple[int, list[int]]:
+    """``(tip, checkpoint versions)`` from ONE listing of the log
+    directory; ``(-1, [])`` for an empty/absent log."""
     ldir = _log_dir(table_dir)
     if not os.path.isdir(ldir):
-        return -1
-    versions = [
-        int(f[: -len(".json")])
-        for f in os.listdir(ldir)
-        if f.endswith(".json") and not f.endswith(".checkpoint.json")
-    ]
-    return max(versions, default=-1)
+        return -1, []
+    tip, ckpts = -1, []
+    for f in os.listdir(ldir):
+        if f.endswith(".checkpoint.json"):
+            ckpts.append(int(f[: -len(".checkpoint.json")]))
+        elif f.endswith(".json"):
+            tip = max(tip, int(f[: -len(".json")]))
+    return tip, ckpts
+
+
+def latest_version(table_dir: str) -> int:
+    """Highest committed version, or -1 for an empty/absent log."""
+    return _log_entries(table_dir)[0]
+
+
+def _fsync_dir(path: str) -> None:
+    """fsync a DIRECTORY so a freshly published entry (not just its
+    content) survives power loss."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def _commit_path(table_dir: str, version: int) -> str:
@@ -221,15 +243,9 @@ def commit(
                             ) from None
                         continue  # append: rebase on the new tip and retry
                     raise  # EPERM/EXDEV/...: surface, finally sweeps tmp
-            # Durability: fsync the LOG DIRECTORY so the new entry (not
-            # just its content) survives power loss — without this a
-            # crash can silently lose the newest commit after commit()
-            # already returned.
-            dfd = os.open(_log_dir(table_dir), os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
+            # Durability: without the directory fsync a crash can
+            # silently lose the newest commit after commit() returned.
+            _fsync_dir(_log_dir(table_dir))
             return version
         finally:
             # every exit path (publish, lost race retry, serialization or
@@ -243,85 +259,218 @@ def _checkpoint_path(table_dir: str, version: int) -> str:
     return os.path.join(_log_dir(table_dir), f"{version:020d}.checkpoint.json")
 
 
-def _newest_checkpoint(table_dir: str, version: int) -> dict | None:
-    """Newest checkpoint at or below ``version``, or None. Checkpoints
-    never replace commits (time travel to pre-checkpoint versions replays
-    from an older checkpoint, or from 0) — they only shorten the fold."""
-    ldir = _log_dir(table_dir)
-    if not os.path.isdir(ldir):
-        return None
-    best = max(
-        (
-            int(f[: -len(".checkpoint.json")])
-            for f in os.listdir(ldir)
-            if f.endswith(".checkpoint.json")
-            and int(f[: -len(".checkpoint.json")]) <= version
-        ),
-        default=None,
-    )
-    if best is None:
-        return None
-    with open(_checkpoint_path(table_dir, best)) as f:
-        return json.load(f)
+class Snapshot(NamedTuple):
+    """One fold of the log as of ``version``: the live add ``actions``,
+    the per-app ``txns`` high-water marks, and the governing
+    ``metadata`` (the LATEST metaData action at or below the version;
+    None if the table never declared one). Every entry point folds once
+    and passes this down; its methods answer from it without touching
+    the log again."""
+
+    actions: list
+    txns: dict
+    metadata: dict | None
+    version: int
+
+    def files(
+        self, predicate_range: tuple[str, object, object] | None = None
+    ) -> list[str]:
+        """Data file paths, with optional file-level data skipping —
+        see :func:`snapshot_files`."""
+        if predicate_range is None:
+            return [_action_path(a) for a in self.actions]
+        col, lo, hi = predicate_range
+        if _mapping_of(self.metadata):
+            col = _physical_name(self.metadata, col)
+        # normalize the caller's bounds the same way the stats were encoded
+        # (dates→ISO strings, decimals→outward-widened floats) so the
+        # comparison is type-consistent and conservatively widened
+        lo, hi = _prune_bound(lo, "lo"), _prune_bound(hi, "hi")
+        keep = []
+        for a in self.actions:
+            stats = a.get("stats", {}) if isinstance(a, dict) else {}
+            if col in stats:
+                mn, mx = stats[col]
+                if mn is not None and mx is not None and (mx < lo or mn > hi):
+                    continue
+            keep.append(_action_path(a))
+        return keep
+
+    @property
+    def dvs(self) -> dict[str, dict]:
+        """The snapshot's deletion vectors — see :func:`_dv_map`."""
+        return _dv_map(self.actions)
+
+    def scan(
+        self,
+        spark: SparkSession,
+        files: list[str],
+        with_meta: bool = False,
+        dvs: dict[str, dict] | None = None,
+    ) -> DataFrame:
+        """Scan specific data files under this snapshot's log-governed
+        schema with deletion vectors applied (``dvs``, default: this
+        snapshot's own) — the ONE reader every path shares, so no read
+        can resurrect merge-on-read-deleted rows by opening a data file
+        raw.
+
+        - **Declared schema.** The metaData schema, not the parquet
+          footers, plans the scan: files written before an evolution
+          null-fill the new columns, with no ``mergeSchema`` sweep.
+        - **Column mapping.** Files carry PHYSICAL names; the scan is
+          planned physical and projected to logical names after
+          (scan-meta scratch columns pass through), so predicates over
+          logical names resolve against any file vintage.
+        - **Deletion vectors.** Rows listed in a file's DV are removed by
+          ONE broadcast anti-join on ``(_metadata.file_path,
+          _metadata.row_index)`` against the union of the referenced
+          sidecars. Files without a DV and ``with_meta=False`` take the
+          plain one-scan plan. ``with_meta`` keeps
+          ``__txlog_file``/``__txlog_pos`` provenance columns (reserved
+          scratch names — a table using them fails analysis loudly).
+
+        Scale: the DV relation is bounded by the deleted-row count of the
+        files being read — trickle-delete-sized by construction
+        (:func:`delete_where` only routes small per-file fractions to a
+        DV; OPTIMIZE/compaction reconciles accumulated DVs into
+        rewrites, the same escape Delta documents when DVs grow)."""
+        from pyspark.sql import functions as F
+
+        meta = self.metadata
+        declared = (meta or {}).get("schema")
+        mapping = _mapping_of(meta)
+        reader = spark.read
+        if declared is not None:
+            reader = reader.schema(
+                _physical_ddl(declared, meta) if mapping else declared
+            )
+        dvs = self.dvs if dvs is None else dvs
+        dv_dirs = sorted(
+            {dvs[ap]["path"] for ap in map(os.path.abspath, files) if ap in dvs}
+        )
+        scratch = ("__txlog_file", "__txlog_pos")
+        df = reader.parquet(*files)
+        if dv_dirs or with_meta:
+            df = df.select(
+                "*",
+                F.col("_metadata.file_path").alias("__txlog_file"),
+                F.col("_metadata.row_index").alias("__txlog_pos"),
+            )
+        if dv_dirs:
+            dv_rel = spark.read.parquet(*dv_dirs).select(
+                F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
+            )
+            df = df.join(
+                F.broadcast(dv_rel),
+                (F.col("__txlog_file") == F.col("__dv_file"))
+                & (F.col("__txlog_pos") == F.col("__dv_pos")),
+                "left_anti",
+            )
+            if not with_meta:
+                df = df.drop(*scratch)
+        if mapping:
+            df = _project_logical(df, meta, keep=scratch if with_meta else ())
+        return df
 
 
-def _resolve(
-    table_dir: str, version: int | None
-) -> tuple[list, dict, dict | None, int]:
-    """(actions, txn_app_versions, metadata, version) as of ``version`` —
-    fold from the newest checkpoint ≤ version, replaying only the tail
-    commits. ``metadata`` is the LATEST metaData action at or below the
-    version (None if the table never declared one)."""
-    tip = latest_version(table_dir)
+_EMPTY = Snapshot([], {}, None, -1)
+
+
+def _commits(table_dir: str, start: int, end: int):
+    """Parsed commit payloads ``start..end``, in version order."""
+    for v in range(start, end + 1):
+        with open(_commit_path(table_dir, v)) as f:
+            yield json.load(f)
+
+
+def _apply(snap: Snapshot, c: dict) -> Snapshot:
+    """Fold one commit payload onto a snapshot (neither is mutated)."""
+    removed = set(c["remove"])
+    actions = [a for a in snap.actions if _action_path(a) not in removed]
+    actions.extend(c["add"])
+    txns, t = snap.txns, c.get("txn")
+    if t:
+        prev = txns.get(t["app_id"])
+        b = int(t["batch_id"])
+        if prev is None or b > int(prev):
+            txns = {**txns, t["app_id"]: b}
+    meta = snap.metadata if c.get("metadata") is None else c["metadata"]
+    return Snapshot(actions, txns, meta, c["version"])
+
+
+def _resolve(table_dir: str, version: int | None) -> Snapshot:
+    """The :class:`Snapshot` as of ``version`` (default: tip) — fold from
+    the newest checkpoint ≤ version, replaying only the tail commits."""
+    tip, ckpts = _log_entries(table_dir)
     if version is None:
         version = tip
     if version > tip or version < 0:
         raise ValueError(f"version {version} not in log (tip {tip})")
-    ckpt = _newest_checkpoint(table_dir, version)
-    actions: list = list(ckpt["actions"]) if ckpt else []
-    txns: dict = dict(ckpt["txn_app_versions"]) if ckpt else {}
-    meta: dict | None = ckpt.get("metadata") if ckpt else None
-    start = ckpt["version"] + 1 if ckpt else 0
-    for v in range(start, version + 1):
-        with open(_commit_path(table_dir, v)) as f:
-            c = json.load(f)
-        removed = set(c["remove"])
-        actions = [a for a in actions if _action_path(a) not in removed]
-        actions.extend(c["add"])
-        t = c.get("txn")
-        if t:
-            prev = txns.get(t["app_id"])
-            b = int(t["batch_id"])
-            if prev is None or b > int(prev):
-                txns[t["app_id"]] = b
-        if c.get("metadata") is not None:
-            meta = c["metadata"]
-    return actions, txns, meta, version
+    # checkpoints never replace commits: time travel to a pre-checkpoint
+    # version replays from an older checkpoint, or from 0
+    best = max((c for c in ckpts if c <= version), default=None)
+    snap = _EMPTY
+    if best is not None:
+        with open(_checkpoint_path(table_dir, best)) as f:
+            ck = json.load(f)
+        snap = Snapshot(
+            list(ck["actions"]),
+            dict(ck["txn_app_versions"]),
+            ck.get("metadata"),
+            ck["version"],
+        )
+    for c in _commits(table_dir, snap.version + 1, version):
+        snap = _apply(snap, c)
+    return snap
+
+
+def snapshot(table_dir: str, version: int | None = None) -> Snapshot:
+    """The table's :class:`Snapshot` as of ``version`` (default: tip)."""
+    return _resolve(table_dir, version)
+
+
+def _replay(table_dir: str, start: int, end: int):
+    """Yield ``(payload, before, after)`` for each commit ``start..end``
+    — the commit and the snapshots either side of it — folding the log
+    once: the snapshot before ``start`` is one ordinary fold, and each
+    later commit file is opened exactly once. The per-version state
+    behind the change feed (batch and streaming) and :func:`vacuum`."""
+    snap = _resolve(table_dir, start - 1) if start > 0 else _EMPTY
+    for c in _commits(table_dir, start, end):
+        after = _apply(snap, c)
+        yield c, snap, after
+        snap = after
 
 
 def write_checkpoint(table_dir: str, version: int | None = None) -> int:
     """Materialize the fold at ``version`` (default: tip) as
     ``<version>.checkpoint.json`` — Delta's ``_last_checkpoint``. Later
-    resolutions for any target ≥ this version replay only the commits
-    after it, keeping the driver-side fold O(tail) for long-lived tables.
+    folds for any target ≥ this version replay only the commits after
+    it, keeping the driver-side fold O(tail) for long-lived tables.
     Also carries the per-app txn high-water marks and the table
     metadata so :func:`last_txn` / :func:`table_metadata` stay
-    checkpoint-compatible."""
-    actions, txns, meta, version = _resolve(table_dir, version)
-    path = _checkpoint_path(table_dir, version)
+    checkpoint-compatible. Published durably: the temp file is fsynced
+    before the atomic rename and the log directory after it, so a crash
+    can never leave a torn checkpoint that every later fold would trip
+    over."""
+    snap = _resolve(table_dir, version)
+    path = _checkpoint_path(table_dir, snap.version)
     tmp = f"{path}.{uuid.uuid4().hex}.tmp"
     with open(tmp, "w") as f:
         json.dump(
             {
-                "version": version,
-                "actions": actions,
-                "txn_app_versions": txns,
-                "metadata": meta,
+                "version": snap.version,
+                "actions": snap.actions,
+                "txn_app_versions": snap.txns,
+                "metadata": snap.metadata,
             },
             f,
         )
+        f.flush()
+        os.fsync(f.fileno())
     os.rename(tmp, path)  # atomic publish; idempotent (same fold content)
-    return version
+    _fsync_dir(_log_dir(table_dir))
+    return snap.version
 
 
 def _ts_seconds(ts) -> float:
@@ -470,25 +619,7 @@ def snapshot_files(
     physical name the per-file stats are keyed by (stats are collected
     over the written, physical-named frame), so skipping keeps working
     across renames."""
-    actions, _, meta, _ = _resolve(table_dir, version)
-    if predicate_range is None:
-        return [_action_path(a) for a in actions]
-    col, lo, hi = predicate_range
-    if _mapping_of(meta):
-        col = _physical_name(meta, col)
-    # normalize the caller's bounds the same way the stats were encoded
-    # (dates→ISO strings, decimals→outward-widened floats) so the
-    # comparison is type-consistent and conservatively widened
-    lo, hi = _prune_bound(lo, "lo"), _prune_bound(hi, "hi")
-    keep = []
-    for a in actions:
-        stats = a.get("stats", {}) if isinstance(a, dict) else {}
-        if col in stats:
-            mn, mx = stats[col]
-            if mn is not None and mx is not None and (mx < lo or mn > hi):
-                continue
-        keep.append(_action_path(a))
-    return keep
+    return _resolve(table_dir, version).files(predicate_range)
 
 
 def read_version(
@@ -523,38 +654,35 @@ def read_version(
     DV state, so time travel before a merge-on-read DELETE still sees
     the rows and a restore across one resurrects them."""
     version = _resolve_travel(table_dir, version, timestamp, "read_version")
-    actions, _, meta, v = _resolve(table_dir, version)
-    files = snapshot_files(table_dir, v, predicate_range)
-    reader = spark.read
-    declared = (meta or {}).get("schema")
-    mapping = _mapping_of(meta)
+    return _read_snapshot(
+        spark, table_dir, _resolve(table_dir, version), predicate_range
+    )
+
+
+def _read_snapshot(
+    spark: SparkSession,
+    table_dir: str,
+    snap: Snapshot,
+    predicate_range: tuple[str, object, object] | None = None,
+) -> DataFrame:
+    """:func:`read_version` over an already-folded snapshot."""
+    files = snap.files(predicate_range)
+    if files:
+        return snap.scan(spark, files)
+    declared = (snap.metadata or {}).get("schema")
     if declared is not None:
-        # under column mapping (RENAME/DROP COLUMN without rewrite) the
-        # files carry PHYSICAL names: plan the scan physical, project to
-        # the snapshot's logical names after; unmapped tables keep the
-        # byte-identical pre-mapping plan
-        reader = reader.schema(
-            _physical_ddl(declared, meta) if mapping else declared
-        )
-    if not files:
-        if declared is not None:
-            return spark.createDataFrame([], declared)
-        all_files = snapshot_files(table_dir, v)
-        if all_files:
-            return spark.read.parquet(all_files[0]).limit(0)
-        # zero files AND no declared schema: there is nothing to lift a
-        # schema from — raise the real reason instead of letting the
-        # zero-path reader fail with an unrelated inference error
-        raise ValueError(
-            f"snapshot v{v} of {table_dir} has no data files and no "
-            "declared schema; commit table metadata to make empty "
-            "snapshots readable"
-        )
-    # deletion vectors (merge-on-read): files whose action carries a dv
-    # descriptor drop their deleted rows via one broadcast anti-join at
-    # scan time; dv-less snapshots take the identical pre-DV plan
-    scan = _scan_files_with_dvs(spark, files, _dv_map(actions), reader)
-    return _project_logical(scan, meta) if mapping else scan
+        return spark.createDataFrame([], declared)
+    all_files = snap.files()
+    if all_files:
+        return spark.read.parquet(all_files[0]).limit(0)
+    # zero files AND no declared schema: there is nothing to lift a
+    # schema from — raise the real reason instead of letting the
+    # zero-path reader fail with an unrelated inference error
+    raise ValueError(
+        f"snapshot v{snap.version} of {table_dir} has no data files and no "
+        "declared schema; commit table metadata to make empty "
+        "snapshots readable"
+    )
 
 
 def _local_path(p: str) -> str:
@@ -770,8 +898,6 @@ def _readback_stats(spark: SparkSession, paths: list[str], stats_cols: list[str]
     return by_file, nrows
 
 
-
-
 def _dv_map(actions) -> dict[str, dict]:
     """``{abs data-file path: dv descriptor}`` for every action carrying
     a deletion vector. A descriptor is ``{"path": <sidecar parquet dir>,
@@ -784,87 +910,6 @@ def _dv_map(actions) -> dict[str, dict]:
         for a in actions
         if isinstance(a, dict) and a.get("dv")
     }
-
-
-def _scan_files_with_dvs(
-    spark: SparkSession,
-    files: list[str],
-    dv_by_path: dict[str, dict],
-    reader,
-    with_meta: bool = False,
-):
-    """DV-aware distributed scan of specific data files: rows listed in
-    a file's deletion vector are removed by ONE broadcast anti-join on
-    ``(_metadata.file_path, _metadata.row_index)`` against the union of
-    the referenced sidecars — merge-on-read, no data file rewritten.
-    Files without a DV and ``with_meta=False`` take the exact pre-DV
-    fast path (one plain parquet scan, plan unchanged). ``with_meta``
-    keeps ``__txlog_file``/``__txlog_pos`` provenance columns (reserved
-    scratch names — a table using them fails analysis loudly).
-
-    Scale: the DV relation is bounded by the deleted-row count of the
-    files being read — trickle-delete-sized by construction
-    (:func:`delete_where` only routes small per-file fractions to a DV;
-    OPTIMIZE/compaction reconciles accumulated DVs into rewrites, the
-    same escape Delta documents when DVs grow)."""
-    from pyspark.sql import functions as F
-
-    dv_files = [p for p in files if os.path.abspath(p) in dv_by_path]
-    if not dv_files and not with_meta:
-        return reader.parquet(*files)
-    base = reader.parquet(*files).select(
-        "*",
-        F.col("_metadata.file_path").alias("__txlog_file"),
-        F.col("_metadata.row_index").alias("__txlog_pos"),
-    )
-    if dv_files:
-        dirs = sorted(
-            {dv_by_path[os.path.abspath(p)]["path"] for p in dv_files}
-        )
-        dv_rel = spark.read.parquet(*dirs).select(
-            F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
-        )
-        base = base.join(
-            F.broadcast(dv_rel),
-            (F.col("__txlog_file") == F.col("__dv_file"))
-            & (F.col("__txlog_pos") == F.col("__dv_pos")),
-            "left_anti",
-        )
-    return base if with_meta else base.drop("__txlog_file", "__txlog_pos")
-
-
-def _scan_files(
-    spark: SparkSession,
-    table_dir: str,
-    version: int,
-    files: list[str],
-    with_meta: bool = False,
-):
-    """Scan specific snapshot data files under the log-governed schema
-    with the snapshot's deletion vectors applied — the read primitive
-    every DML path (touched-file discovery, rewrite reads) shares with
-    :func:`read_version`, so no path can resurrect merge-on-read-deleted
-    rows by reading a data file raw. Under column mapping the scan is
-    planned physical and projected to logical names (scan-meta scratch
-    columns pass through), so DML predicates — written over logical
-    names — resolve against any file vintage."""
-    actions, _, meta, _ = _resolve(table_dir, version)
-    declared = (meta or {}).get("schema")
-    mapping = _mapping_of(meta)
-    if declared is not None:
-        reader = spark.read.schema(
-            _physical_ddl(declared, meta) if mapping else declared
-        )
-    else:
-        reader = spark.read
-    scan = _scan_files_with_dvs(
-        spark, files, _dv_map(actions), reader, with_meta=with_meta
-    )
-    if mapping:
-        scan = _project_logical(
-            scan, meta, keep=("__txlog_file", "__txlog_pos") if with_meta else ()
-        )
-    return scan
 
 
 def merge_into(
@@ -905,8 +950,9 @@ def merge_into(
     """
     from pyspark.sql import functions as F
 
-    tip = latest_version(table_dir)
-    cols = read_version(spark, table_dir, tip).columns
+    snap = _resolve(table_dir, None)
+    tip = snap.version
+    cols = _read_snapshot(spark, table_dir, snap).columns
     src = source.select(*cols)
 
     # pass 1: prune by the source's key envelope, then find touched files
@@ -927,7 +973,7 @@ def merge_into(
         # empty batches never grow the snapshot's action list
         return tip, []
     cand = (
-        snapshot_files(table_dir, tip, predicate_range=(key, lo, hi))
+        snap.files((key, lo, hi))
         if lo is not None
         else []  # only-NULL-key source: no file can be touched
     )
@@ -938,7 +984,7 @@ def merge_into(
             # DV-aware scan: a key whose only occurrence is a
             # merge-on-read-deleted row must NOT touch the file (the key
             # is absent from the table — it is a plain insert)
-            _scan_files(spark, table_dir, tip, cand, with_meta=True)
+            snap.scan(spark, cand, with_meta=True)
             .select(F.col(key), F.col("__txlog_file").alias("f"))
             .join(F.broadcast(keys), key, "left_semi")
             .select("f")
@@ -966,7 +1012,7 @@ def merge_into(
             .select(key)
         )
         clash = (
-            _scan_files(spark, table_dir, tip, touched)
+            snap.scan(spark, touched)
             .join(F.broadcast(dup_keys), key, "left_semi")
             .select(key)
             .limit(1)
@@ -996,7 +1042,7 @@ def merge_into(
     if touched:
         # DV-aware rewrite read: raw file rows that a deletion vector
         # already removed must not be carried along (resurrection)
-        tgt = _scan_files(spark, table_dir, tip, touched)
+        tgt = snap.scan(spark, touched)
         joined = tgt.join(marked, key, "full_outer")
         merged = joined.select(
             F.col(key),
@@ -1013,7 +1059,7 @@ def merge_into(
         # nothing matched anywhere: pure insert, every row is new
         merged = src.withColumn("__txlog_modified", F.lit(True))
     new_actions = _write_files_checked(
-        merged, table_dir, table_metadata(table_dir, tip), stats_cols
+        merged, table_dir, snap.metadata, stats_cols
     )
     version = commit(
         table_dir, add=new_actions, remove=touched, expected_version=tip + 1,
@@ -1053,7 +1099,7 @@ def delete_where(
        rows, merged with the file's existing DV and attached to its
        re-committed add action as ``{"dv": {"path", "cardinality"}}``;
        the data file is NOT rewritten, and every reader anti-joins the
-       DV at scan time (:func:`_scan_files_with_dvs`). Files above the
+       DV at scan time (:meth:`Snapshot.scan`). Files above the
        threshold (or without a recorded ``num_rows`` to judge by, or
        with ``f=0.0`` — the default, pure copy-on-write) are rewritten
        WITHOUT the matching rows (SQL DELETE semantics: a row is
@@ -1074,17 +1120,17 @@ def delete_where(
     exactly: each version reads under its own DV state."""
     from pyspark.sql import functions as F
 
-    tip = latest_version(table_dir)
-    cand = snapshot_files(table_dir, tip, predicate_range=prune_range)
+    snap = _resolve(table_dir, None)
+    tip, meta = snap.version, snap.metadata
+    cand = snap.files(prune_range)
     if not cand:
         return tip, []
-    actions, _, meta, _ = _resolve(table_dir, tip)
-    by_path = {os.path.abspath(_action_path(a)): a for a in actions}
+    by_path = {os.path.abspath(_action_path(a)): a for a in snap.actions}
     # file name projected AT THE SCAN — post-filter provenance IS the
     # scan row's provenance, same discipline as merge_into; the per-file
     # match COUNT feeds the DV-vs-rewrite routing below
     hit = (
-        _scan_files(spark, table_dir, tip, cand, with_meta=True)
+        snap.scan(spark, cand, with_meta=True)
         .select(
             F.col("__txlog_file").alias("f"),
             F.coalesce(F.expr(predicate), F.lit(False)).alias("__del"),
@@ -1114,7 +1160,7 @@ def delete_where(
         rw_class.append(p)
     new_actions: list = []
     if rw_class:
-        kept = _scan_files(spark, table_dir, tip, rw_class).where(
+        kept = snap.scan(spark, rw_class).where(
             ~F.coalesce(F.expr(predicate), F.lit(False))
         )
         new_actions.extend(
@@ -1127,7 +1173,7 @@ def delete_where(
     if dv_class:
         new_actions.extend(
             _write_deletion_vectors(
-                spark, table_dir, tip, dv_class, predicate, by_path, uri_by_path
+                spark, table_dir, snap, dv_class, predicate, uri_by_path
             )
         )
     version = commit(
@@ -1140,10 +1186,9 @@ def delete_where(
 def _write_deletion_vectors(
     spark: SparkSession,
     table_dir: str,
-    version: int,
+    snap: Snapshot,
     files: list[str],
     predicate: str,
-    by_path: dict,
     uri_by_path: dict[str, str],
 ) -> list[dict]:
     """Materialize ONE deletion-vector sidecar (parquet dir of
@@ -1160,21 +1205,17 @@ def _write_deletion_vectors(
     :func:`write_files`' stats."""
     from pyspark.sql import functions as F
 
-    scan = _scan_files(spark, table_dir, version, files, with_meta=True)
-    newly = scan.where(
+    by_path = {os.path.abspath(_action_path(a)): a for a in snap.actions}
+    newly = snap.scan(spark, files, with_meta=True).where(
         F.coalesce(F.expr(predicate), F.lit(False))
     ).select(
         F.col("__txlog_file").alias("file"),
         F.col("__txlog_pos").alias("pos"),
     )
     uris = [uri_by_path[os.path.abspath(p)] for p in files]
+    dvs = snap.dvs
     old_dirs = sorted(
-        {
-            dv["path"]
-            for p in files
-            for dv in ((by_path[os.path.abspath(p)].get("dv"),) if isinstance(by_path[os.path.abspath(p)], dict) else ())
-            if dv
-        }
+        {dvs[ap]["path"] for ap in map(os.path.abspath, files) if ap in dvs}
     )
     if old_dirs:
         newly = newly.unionByName(
@@ -1312,23 +1353,24 @@ def update_where(
     :func:`vacuum`."""
     from pyspark.sql import functions as F
 
-    tip = latest_version(table_dir)
-    cand = snapshot_files(table_dir, tip, predicate_range=prune_range)
-    snap = read_version(spark, table_dir, tip)
-    cols = snap.columns
+    snap = _resolve(table_dir, None)
+    tip = snap.version
+    cand = snap.files(prune_range)
+    frame = _read_snapshot(spark, table_dir, snap)
+    cols = frame.columns
     unknown = set(set_exprs) - set(cols)
     if unknown:
         raise ValueError(
             f"UPDATE SET references non-existent column(s) {sorted(unknown)}; "
             f"table columns are {cols}"
         )
-    _check_update_types(snap, set_exprs)
+    _check_update_types(frame, set_exprs)
     touched: list[str] = []
     if cand:
         hit = (
             # DV-aware scan: a predicate matching only merge-on-read-
             # deleted rows must not touch (or resurrect through) a file
-            _scan_files(spark, table_dir, tip, cand, with_meta=True)
+            snap.scan(spark, cand, with_meta=True)
             # file name projected AT THE SCAN — post-filter provenance
             # IS the scan row's provenance, same discipline as merge_into
             .select(
@@ -1345,7 +1387,7 @@ def update_where(
     if not touched:
         return tip, []  # no matching row anywhere: metadata-only no-op
     cond = F.coalesce(F.expr(predicate), F.lit(False))
-    tgt = _scan_files(spark, table_dir, tip, touched)
+    tgt = snap.scan(spark, touched)
     # one select over the old row image: all SET expressions (and the
     # predicate) see pre-update values, and each output keeps the
     # column's original type (UPDATE never changes the schema). The
@@ -1364,7 +1406,7 @@ def update_where(
         cond.alias("__txlog_modified"),
     )
     new_actions = _write_files_checked(
-        updated, table_dir, table_metadata(table_dir, tip), stats_cols
+        updated, table_dir, snap.metadata, stats_cols
     )
     version = commit(
         table_dir, add=new_actions, remove=touched, expected_version=tip + 1,
@@ -1463,21 +1505,20 @@ def restore(table_dir: str, version: int | None = None, timestamp=None) -> int:
     version = _resolve_travel(table_dir, version, timestamp, "restore")
     if version is None:
         raise ValueError("restore: pass version= or timestamp=")
-    tip = latest_version(table_dir)
-    cur_actions, _, cur_meta, _ = _resolve(table_dir, tip)
-    old_actions, _, old_meta, _ = _resolve(table_dir, version)
+    cur_snap = _resolve(table_dir, None)
+    old_snap = _resolve(table_dir, version)
     # compare whole ACTIONS, not just paths: a path present in both
     # versions under a DIFFERENT action (a deletion vector attached, a
     # stats change) must be removed and re-added with the target
     # version's action, or the restore silently keeps the current
     # descriptor (e.g. rows a later DV DELETE removed stay dead)
-    cur = {_action_path(a): a for a in cur_actions}
-    old = {_action_path(a): a for a in old_actions}
+    cur = {_action_path(a): a for a in cur_snap.actions}
+    old = {_action_path(a): a for a in old_snap.actions}
     # existence must cover deletion-vector sidecars too: restoring a
     # version whose actions reference a vacuumed DV would commit a tip
     # whose every read throws at the anti-join load
-    cur_dvs = {d["path"] for d in _dv_map(cur_actions).values()}
-    old_dvs = {d["path"] for d in _dv_map(old_actions).values()}
+    cur_dvs = {d["path"] for d in cur_snap.dvs.values()}
+    old_dvs = {d["path"] for d in old_snap.dvs.values()}
     missing = sorted(
         p for p in old if p not in cur and not os.path.exists(p)
     ) + sorted(
@@ -1489,11 +1530,12 @@ def restore(table_dir: str, version: int | None = None, timestamp=None) -> int:
             f"data file(s) no longer exist (vacuumed past the restore "
             f"target), e.g. {missing[0]}"
         )
+    old_meta, cur_meta = old_snap.metadata, cur_snap.metadata
     return commit(
         table_dir,
         add=[a for p, a in old.items() if cur.get(p) != a],
         remove=[p for p, a in cur.items() if old.get(p) != a],
-        expected_version=tip + 1,
+        expected_version=cur_snap.version + 1,
         metadata=old_meta if old_meta is not None and old_meta != cur_meta else None,
         operation="RESTORE",
     )
@@ -1509,8 +1551,7 @@ def table_metadata(table_dir: str, version: int | None = None) -> dict | None:
     so :func:`validated_write` works as a table's first-ever write."""
     if version is None and latest_version(table_dir) < 0:
         return None
-    _, _, meta, _ = _resolve(table_dir, version)
-    return meta
+    return _resolve(table_dir, version).metadata
 
 
 def _ddl_fields(ddl: str) -> list[tuple[str, str]]:
@@ -1921,11 +1962,11 @@ def add_constraints(
     can still declare unvalidated constraints (the protocol layer stays
     policy-free), accepting that legacy violations then live outside any
     DML's responsibility."""
-    tip = latest_version(table_dir)
-    meta = dict(table_metadata(table_dir) or {})
-    if tip >= 0 and snapshot_files(table_dir, tip):
+    snap = _EMPTY if latest_version(table_dir) < 0 else _resolve(table_dir, None)
+    meta = dict(snap.metadata or {})
+    if snap.files():
         _enforce_constraints(
-            read_version(spark, table_dir, tip), {"constraints": constraints}
+            _read_snapshot(spark, table_dir, snap), {"constraints": constraints}
         )
     merged = dict(meta.get("constraints") or {})
     merged.update(constraints)
@@ -1934,7 +1975,7 @@ def add_constraints(
         table_dir,
         add=[],
         metadata=meta,
-        expected_version=tip + 1,
+        expected_version=snap.version + 1,
         operation="ADD CONSTRAINT",
     )
 
@@ -1950,9 +1991,8 @@ def count_rows(table_dir: str, version: int | None = None) -> int | None:
     O(actions) driver-side fold, zero data read."""
     if version is None and latest_version(table_dir) < 0:
         return None
-    actions, _, _, _ = _resolve(table_dir, version)
     total = 0
-    for a in actions:
+    for a in _resolve(table_dir, version).actions:
         if not isinstance(a, dict) or "num_rows" not in a:
             return None
         dv = a.get("dv") or {}
@@ -1981,9 +2021,8 @@ def history(table_dir: str) -> list[dict]:
     exposes DESCRIBE HISTORY for exactly this "what changed the table,
     when" audit."""
     rows: list[dict] = []
-    for v in range(latest_version(table_dir) + 1):
-        with open(_commit_path(table_dir, v)) as f:
-            payload = json.load(f)
+    tip = latest_version(table_dir)
+    for v, payload in enumerate(_commits(table_dir, 0, tip)):
         add = payload.get("add") or []
         remove = payload.get("remove") or []
         meta = payload.get("metadata")
@@ -2037,8 +2076,8 @@ def vacuum(
     version are bit-identical (vacuum never touches their files) and
     time travel past the horizon fails loudly at read time — pinned in
     ``tests/test_txlog.py``. ``dry_run=True`` lists without deleting.
-    The walk is metadata-only: O(files on disk) + O(retained actions),
-    no data read.
+    The walk is metadata-only: O(files on disk) + one replay of the log
+    (each commit file opened once), no data read.
 
     **Uncommitted-writer safety**: a concurrent writer's
     :func:`write_files` output sits on disk referenced by NO commit
@@ -2085,30 +2124,30 @@ def vacuum(
 
     now = _time.time()
     tip = latest_version(table_dir)
+    first = max(0, tip - max(0, retention_versions))
+    # ONE replay from version 0 collects both sets. `live`: every file
+    # (and DV sidecar dir) live in ANY retained snapshot — exactly the
+    # oldest retained snapshot's actions plus every later commit's adds.
+    # `ever_*`: every path ANY commit ever added; a data file absent
+    # from it was never committed — either garbage from a crashed writer
+    # (old) or an IN-FLIGHT writer's pending output (young, protected
+    # below). Sidecar DIRS are tracked the same way: a sidecar is row
+    # data (deleted positions) whose lifecycle follows its actions.
     live: set[str] = set()
     live_dv: set[str] = set()
-    for v in range(max(0, tip - max(0, retention_versions)), tip + 1):
-        acts = _resolve(table_dir, v)[0]
-        live.update(os.path.abspath(_action_path(a)) for a in acts)
-        live_dv.update(
-            os.path.abspath(d["path"]) for d in _dv_map(acts).values()
-        )
-    # every path ANY commit ever added: a data file absent from this set
-    # was never committed — either garbage from a crashed writer (old)
-    # or an IN-FLIGHT writer's pending output (young, protected below).
-    # Deletion-vector sidecar DIRS are tracked the same way: a sidecar is
-    # row data (deleted positions) whose lifecycle follows its actions.
     ever_referenced: set[str] = set()
     ever_dv: set[str] = set()
-    for v in range(tip + 1):
-        with open(_commit_path(table_dir, v)) as f:
-            adds = json.load(f).get("add") or ()
-        ever_referenced.update(
-            os.path.abspath(_action_path(a)) for a in adds
-        )
-        ever_dv.update(
-            os.path.abspath(d["path"]) for d in _dv_map(adds).values()
-        )
+
+    def collect(acts, paths: set[str], dv_dirs: set[str]) -> None:
+        paths.update(os.path.abspath(_action_path(a)) for a in acts)
+        dv_dirs.update(os.path.abspath(d["path"]) for d in _dv_map(acts).values())
+
+    for payload, _, after in _replay(table_dir, 0, tip):
+        adds = payload.get("add") or ()
+        collect(adds, ever_referenced, ever_dv)
+        if after.version >= first:
+            acts = after.actions if after.version == first else adds
+            collect(acts, live, live_dv)
     victims = []
     for dirpath, _, files in os.walk(os.path.join(table_dir, "data")):
         for f in files:
@@ -2196,8 +2235,7 @@ def last_txn(table_dir: str, app_id: str) -> int | None:
     foreachBatch idempotence check (skip when ``batch_id <= last_txn``)."""
     if latest_version(table_dir) < 0:
         return None
-    _, txns, _, _ = _resolve(table_dir, None)
-    b = txns.get(app_id)
+    b = _resolve(table_dir, None).txns.get(app_id)
     return int(b) if b is not None else None
 
 
@@ -2329,35 +2367,20 @@ def table_changes(
             f"table_changes range [{start_version}, {end}] outside the "
             f"log's committed range [0, {tip}]"
         )
-    # one reader, resolved ONCE at the END version's log-governed schema
-    # (Delta CDF semantics: the feed is served in the reading snapshot's
-    # schema — files written pre-evolution null-fill the new columns), so
-    # every per-version frame has identical columns for the final union
-    # and the driver-side log fold stays O(range), not O(range × prefix)
-    _, _, end_meta, _ = _resolve(table_dir, end)
-    declared = (end_meta or {}).get("schema")
-    end_mapping = _mapping_of(end_meta)
-    reader = (
-        spark.read.schema(
-            _physical_ddl(declared, end_meta) if end_mapping else declared
-        )
-        if declared is not None
-        else spark.read
-    )
+    # ONE replay across the range: each commit with the snapshots either
+    # side of it (each side of the diff reads under ITS version's DV
+    # state — pre = before the commit, post = after — so a DV commit
+    # feeds exactly the newly-deleted rows, and a rewrite of a DV'd file
+    # diffs only its LIVE pre-image rows). Every side is scanned by the
+    # END snapshot (Delta CDF semantics: the feed is served in the
+    # reading snapshot's schema and logical names — files written
+    # pre-evolution null-fill the new columns, physical names are
+    # frozen), so every per-version frame has identical columns for the
+    # final union.
+    steps = list(_replay(table_dir, start_version, end))
+    end_snap = steps[-1][2]
+    declared = (end_snap.metadata or {}).get("schema")
 
-    def _cdf_scan(files_, dv_):
-        """One side's DV-aware scan, projected to the END version's
-        LOGICAL names under column mapping (the same rule as the
-        schema: the feed is served in the reading snapshot's shape —
-        physical names are frozen, so files from every vintage in the
-        range read uniformly)."""
-        s = _scan_files_with_dvs(spark, files_, dv_, reader)
-        return _project_logical(s, end_meta) if end_mapping else s
-
-    commits: list[dict] = []
-    for v in range(start_version, end + 1):
-        with open(_commit_path(table_dir, v)) as f:
-            commits.append(json.load(f))
     # the feed's meta columns and join-scratch flags live in the Delta-style
     # underscore namespace; a table whose DATA already uses one would
     # silently corrupt classification (withColumn replaces) or duplicate an
@@ -2382,7 +2405,7 @@ def table_changes(
         data_columns = set()
         probe_paths = {
             _action_path(a)
-            for payload in commits
+            for payload, _, _ in steps
             for acts in (payload.get("add") or (), payload.get("remove") or ())
             for a in acts
         }
@@ -2398,32 +2421,12 @@ def table_changes(
     from pyspark.sql.window import Window
 
     per_version: list[DataFrame] = []
-    # deletion-vector awareness: each side reads under ITS version's DV
-    # state (pre = before the commit, post = after), maintained by ONE
-    # incremental action fold across the range — a DV commit (same file
-    # re-referenced with a bigger vector) therefore feeds exactly the
-    # newly-deleted rows as `delete`s, and a rewrite of a DV'd file
-    # diffs only its LIVE pre-image rows
-    state: dict[str, dict | str] = {
-        os.path.abspath(_action_path(a)): a
-        for a in (
-            _resolve(table_dir, start_version - 1)[0]
-            if start_version > 0
-            else ()
-        )
-    }
-    for payload in commits:
+    for payload, before, after in steps:
         v = payload["version"]
-        add_actions = payload.get("add") or ()
-        adds = [_action_path(a) for a in add_actions]
+        adds = [_action_path(a) for a in payload.get("add") or ()]
         removes = [_action_path(a) for a in payload.get("remove") or ()]
         op = payload.get("operation")
-        pre_dv = _dv_map(state.values())
-        for p in removes:
-            state.pop(os.path.abspath(p), None)
-        for a in add_actions:
-            state[os.path.abspath(_action_path(a))] = a
-        post_dv = _dv_map(state.values())
+        pre_dv, post_dv = before.dvs, after.dvs
         meta = (
             F.lit(v).alias("_commit_version"),
             F.lit(op).alias("_operation"),
@@ -2432,7 +2435,7 @@ def table_changes(
             if not adds:
                 continue  # metadata-only commit: no row changes
             per_version.append(
-                _cdf_scan(adds, post_dv).select(
+                end_snap.scan(spark, adds, dvs=post_dv).select(
                     "*", F.lit("insert").alias("_change_type"), *meta
                 )
             )
@@ -2446,16 +2449,16 @@ def table_changes(
         # exchange and the guard costs no extra scan or shuffle.
         dup_w = Window.partitionBy(key)
         pre = (
-            _cdf_scan(removes, pre_dv)
+            end_snap.scan(spark, removes, dvs=pre_dv)
             .withColumn("_b_present", F.lit(True))
             .withColumn("_b_dupn", F.count(F.lit(1)).over(dup_w))
             .alias("b")
         )
         post = (
             (
-                _cdf_scan(adds, post_dv)
+                end_snap.scan(spark, adds, dvs=post_dv)
                 if adds
-                else _cdf_scan(removes, pre_dv).limit(0)
+                else end_snap.scan(spark, removes, dvs=pre_dv).limit(0)
             )
             .withColumn("_a_present", F.lit(True))
             .withColumn("_a_dupn", F.count(F.lit(1)).over(dup_w))
@@ -2533,9 +2536,9 @@ def table_changes(
     if not per_version:
         # metadata-only range: an EMPTY feed in the end-version schema
         # (Delta contract — "no changes" is a row count, not an error)
-        files = snapshot_files(table_dir, end) or snapshot_files(table_dir)
+        files = end_snap.files() or snapshot_files(table_dir)
         if files:
-            base = _cdf_scan([files[0]], {})
+            base = end_snap.scan(spark, [files[0]], dvs={})
         elif declared is not None:
             base = spark.createDataFrame([], declared)
         else:

@@ -80,7 +80,6 @@ same O(churned files) unit as the batch ``table_changes``).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -101,12 +100,6 @@ _CDF_META_FIELDS = (
 )
 
 
-def _commit_payload(table_dir: str, v: int) -> dict:
-    # txlog owns the commit-path format; never re-derive it here
-    with open(txlog._commit_path(table_dir, v)) as f:
-        return json.load(f)
-
-
 def _added_files(
     table_dir: str,
     from_v: int,
@@ -123,8 +116,8 @@ def _added_files(
     already emitted (forwarding them double-counts; forwarding only
     their changed rows is the CDF reader's job, not this one's)."""
     out: list[str] = []
-    for v in range(from_v + 1, to_v + 1):
-        c = _commit_payload(table_dir, v)
+    for c in txlog._commits(table_dir, from_v + 1, to_v):
+        v = c["version"]
         # an add action CARRYING a deletion vector is not a pure append
         # either: it re-references a file whose rows the stream already
         # emitted (a RESTORE re-adding a DV'd action is the add-only
@@ -282,7 +275,7 @@ def _read_data_file(path: str, fields) -> "pyarrow.Table":  # noqa: F821
 def _apply_dv(tbl, path: str, dv_dir: str | None):
     """Drop a data file's deletion-vector positions from its arrow
     table — the executor-side twin of the broadcast anti-join in
-    :func:`txlog._scan_files_with_dvs` (row index IS arrow row order:
+    :meth:`txlog.Snapshot.scan` (row index IS arrow row order:
     ``_read_data_file`` reads the whole file in file order)."""
     if not dv_dir:
         return tbl
@@ -585,8 +578,8 @@ class TxlogStreamReader(DataSourceStreamReader):
         # always include >= 1 version so the stream makes progress past
         # any single oversized commit
         v, count, size = self._consumed, 0, 0
-        while v < tip:
-            adds = _commit_payload(self.table_dir, v + 1).get("add") or ()
+        for c in txlog._commits(self.table_dir, v + 1, tip):
+            adds = c.get("add") or ()
             n = len(adds)
             sz = sum(_add_size(a) for a in adds) if self.max_bytes else 0
             if (count or size) and (
@@ -610,38 +603,24 @@ class TxlogStreamReader(DataSourceStreamReader):
             )
             _check_not_vacuumed(files, start_v, end_v)
             return [_AddedFile(p) for p in files]
-        # CDF planning: per-version dv-state fold from the batch start
-        state: dict[str, dict | str] = (
-            {
-                os.path.abspath(txlog._action_path(a)): a
-                for a in txlog._resolve(self.table_dir, start_v)[0]
-            }
-            if start_v >= 0
-            else {}
-        )
-
-        def dv_of(p: str, actions: dict) -> str | None:
-            a = actions.get(os.path.abspath(p))
-            dv = a.get("dv") if isinstance(a, dict) else None
+        # CDF planning: each side of a commit's diff carries the DV state
+        # of the snapshot it reads (pre = before the commit, post = after)
+        def dv_of(p: str, dvs: dict) -> str | None:
+            dv = dvs.get(os.path.abspath(p))
             return dv["path"] if dv else None
 
         parts: list[InputPartition] = []
-        for v in range(start_v + 1, end_v + 1):
-            c = _commit_payload(self.table_dir, v)
+        replay = txlog._replay(self.table_dir, start_v + 1, end_v)
+        for c, before, after in replay:
+            v, op = c["version"], c.get("operation")
             adds = [txlog._action_path(a) for a in c.get("add") or ()]
             removes = list(c.get("remove") or ())
-            op = c.get("operation")
-            pre = [(p, dv_of(p, state)) for p in removes]
-            for p in removes:
-                state.pop(os.path.abspath(p), None)
-            for a in c.get("add") or ():
-                state[os.path.abspath(txlog._action_path(a))] = a
+            pre_dv, post_dv = before.dvs, after.dvs
             if not removes:
-                parts.extend(
-                    _CdfInsert(p, v, op, dv_of(p, state)) for p in adds
-                )
+                parts.extend(_CdfInsert(p, v, op, dv_of(p, post_dv)) for p in adds)
                 continue
-            post = [(p, dv_of(p, state)) for p in adds]
+            pre = [(p, dv_of(p, pre_dv)) for p in removes]
+            post = [(p, dv_of(p, post_dv)) for p in adds]
             parts.append(_CdfDiff(v, op, self.cdf_key, pre, post))
         refs: list[str] = []
         for part in parts:

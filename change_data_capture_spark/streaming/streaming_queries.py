@@ -2741,8 +2741,7 @@ def streaming_txlog_cdf_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         prune_range=("id", _CDF_DEL_LO, _CDF_DEL_HI),
         dv_fraction_threshold=1.0,  # merge-on-read: the feed must not care
     )
-    acts, _, _, _ = txlog._resolve(tdir, None)
-    if not txlog._dv_map(acts):
+    if not txlog.snapshot(tdir).dvs:
         raise RuntimeError(
             "the DELETE did not take the deletion-vector path — the gate "
             "would no longer prove transport-independence of the feed"
@@ -2904,10 +2903,7 @@ def streaming_txlog_rate_limit_bytes(
     executor-memory-sized regardless of how file sizes drift."""
     from change_data_capture_spark.sources import txlog
     from change_data_capture_spark.sources.tables import load_table
-    from change_data_capture_spark.sources.txlog_stream import (
-        TxlogStreamReader,
-        _commit_payload,
-    )
+    from change_data_capture_spark.sources.txlog_stream import TxlogStreamReader
 
     tdir = tempfile.mkdtemp(prefix="cdc_txratebytes_")
     o = load_table(spark, sf_dir, "orders").select(
@@ -2938,8 +2934,8 @@ def streaming_txlog_rate_limit_bytes(
             ),
         )
     sizes = []
-    for v in range(6):
-        adds = _commit_payload(tdir, v).get("add") or ()
+    for c in txlog._commits(tdir, 0, 5):
+        adds = c.get("add") or ()
         if not all(isinstance(a, dict) and a.get("size") for a in adds):
             raise RuntimeError(
                 "add actions must carry their byte size in the LOG — "

@@ -2987,3 +2987,96 @@ def test_write_files_footer_stats_match_readback(spark, tmp_path):
     assert txlog._footer_stats(paths5, ["id"]) is None
     # (the read-back then surfaces an explicit unresolved-column error —
     # never the nested leaf's bounds under the top-level name)
+
+
+def test_write_checkpoint_is_durable(tmp_path, monkeypatch):
+    """The checkpoint's content is fsynced BEFORE the atomic rename
+    publishes it, and the log directory AFTER — a crash can never leave
+    a torn ``<v>.checkpoint.json`` that every later fold would fail to
+    parse."""
+    import stat
+
+    t = str(tmp_path / "t")
+    txlog.commit(t, add=[], txn={"app_id": "app", "batch_id": 7})
+    calls: list[str] = []
+    real_fsync, real_rename = os.fsync, os.rename
+
+    def fsync(fd):
+        is_dir = stat.S_ISDIR(os.fstat(fd).st_mode)
+        calls.append("fsync_dir" if is_dir else "fsync_file")
+        return real_fsync(fd)
+
+    def rename(src, dst):
+        calls.append("rename")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(txlog.os, "fsync", fsync)
+    monkeypatch.setattr(txlog.os, "rename", rename)
+    assert txlog.write_checkpoint(t) == 0
+    assert calls == ["fsync_file", "rename", "fsync_dir"]
+    assert txlog.last_txn(t, "app") == 7  # the checkpoint folds cleanly
+
+
+_OPEN_COUNT_OPS = {
+    "read_version": lambda spark, t: txlog.read_version(
+        spark, t, predicate_range=("id", 40, 59)
+    ),
+    "merge_into": lambda spark, t: txlog.merge_into(
+        spark,
+        t,
+        spark.createDataFrame([(45, "m"), (1000, "new")], "id long, v string"),
+        "id",
+        stats_cols=["id"],
+    ),
+    "update_where": lambda spark, t: txlog.update_where(
+        spark, t, "id = 45", {"v": "'u'"}, stats_cols=["id"],
+        prune_range=("id", 45, 45),
+    ),
+    "delete_where_cow": lambda spark, t: txlog.delete_where(
+        spark, t, "id = 45", stats_cols=["id"], prune_range=("id", 45, 45)
+    ),
+    "delete_where_dv": lambda spark, t: txlog.delete_where(
+        spark, t, "id = 45", stats_cols=["id"], prune_range=("id", 45, 45),
+        dv_fraction_threshold=0.5,
+    ),
+    "table_changes": lambda spark, t: txlog.table_changes(spark, t, 9, 9),
+    "vacuum": lambda spark, t: txlog.vacuum(t, retention_versions=9),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_OPEN_COUNT_OPS))
+def test_each_operation_opens_each_commit_at_most_once(
+    spark, tmp_path, op, monkeypatch
+):
+    """Every entry point folds the log ONCE and passes the snapshot
+    down: on a 10-commit, checkpoint-less log no operation opens any
+    ``_txlog/<v>.json`` twice — vacuum included, whose retained-window
+    and ever-referenced sets come from one replay of the log."""
+    import builtins
+    import collections
+    import re
+
+    t = str(tmp_path / "t")
+    # ten range-clustered files, one per commit: versions 0..9
+    df = spark.range(0, 200, numPartitions=10).selectExpr(
+        "id", "CAST(id AS STRING) AS v"
+    )
+    for a in txlog.write_files(df, t, stats_cols=["id"]):
+        txlog.commit(t, add=[a])
+    assert txlog.latest_version(t) == 9
+    commit_file = re.compile(r"_txlog/\d{20}\.json$")
+    opened: collections.Counter = collections.Counter()
+
+    def counting_open(path, *args, **kwargs):
+        if commit_file.search(str(path)):
+            opened[os.path.basename(path)] += 1
+        return builtins.open(path, *args, **kwargs)
+
+    monkeypatch.setattr(txlog, "open", counting_open, raising=False)
+    _OPEN_COUNT_OPS[op](spark, t)
+    monkeypatch.undo()
+    assert opened, "the counter must see the fold's reads"
+    assert max(opened.values()) == 1, dict(opened)
+    assert sum(opened.values()) <= 10
+    if op == "delete_where_dv":
+        assert txlog.snapshot(t).dvs, "the DELETE must take the DV path"
