@@ -31,7 +31,7 @@ windows need no new exchange or sort. Net: one shuffle for the whole query.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 #: Open-ended validity sentinel. The reference uses 9999-01-01
@@ -39,6 +39,23 @@ from pyspark.sql import functions as F
 #: but inside the pandas/Arrow nanosecond timestamp range, so results survive
 #: any toPandas/Arrow-based comparison harness bit-for-bit.
 SENTINEL_TS = "2260-01-01"
+
+
+def validity(
+    w_ord: WindowSpec, ts_ms_col: str = "ts_ms", sentinel_ts: str = SENTINEL_TS
+) -> tuple[Column, Column]:
+    """The validity chain: each event opens ``[its ts, next event's ts)``
+    under ``w_ord`` (key partition, log order); the last event per key
+    stays open until ``sentinel_ts``. Shared by the batch flagship, the
+    change log and the incremental re-chain, so every SCD2 output in the
+    engine chains intervals the same way."""
+    start = F.timestamp_millis(F.col(ts_ms_col))
+    return (
+        start.alias("row_valid_start_timestamp"),
+        F.coalesce(
+            F.lead(start, 1).over(w_ord), F.lit(sentinel_ts).cast("timestamp")
+        ).alias("row_valid_expiration_timestamp"),
+    )
 
 
 def scd2(
@@ -91,11 +108,7 @@ def scd2(
         cleaned.select(
             key,
             *payload,
-            F.timestamp_millis(F.col(ts_ms_col)).alias("row_valid_start_timestamp"),
-            F.coalesce(
-                F.lead(F.timestamp_millis(F.col(ts_ms_col)), 1).over(w_ord),
-                F.lit(sentinel_ts).cast("timestamp"),
-            ).alias("row_valid_expiration_timestamp"),
+            *validity(w_ord, ts_ms_col, sentinel_ts),
             F.count(F.lit(1)).over(w_all).alias("_n_events"),
         )
         .where(F.col("_n_events") >= min_events)
@@ -116,10 +129,6 @@ def change_log(
         key,
         F.col(order_col).alias("log_seq_num"),
         F.col("op_label").alias("operation_type"),
-        F.timestamp_millis(F.col("ts_ms")).alias("row_valid_start_timestamp"),
-        F.coalesce(
-            F.lead(F.timestamp_millis(F.col("ts_ms")), 1).over(w_ord),
-            F.lit(SENTINEL_TS).cast("timestamp"),
-        ).alias("row_valid_expiration_timestamp"),
+        *validity(w_ord),
         F.row_number().over(w_ord).alias("op_order"),
     )

@@ -617,8 +617,8 @@ def txlog_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     products tip state is committed range-clustered with per-file id
     stats; the delete then (a) prunes non-overlapping files DRIVER-SIDE
     from log metadata, (b) finds the files actually CONTAINING a
-    matching row with one file-bounded distinct-``input_file_name``
-    scan, and (c) rewrites only those files without the matching rows,
+    matching row with one file-bounded grouped scan
+    (``Snapshot.touched``), and (c) rewrites only those files without the matching rows,
     committing add+remove under an ``expected_version`` guard. Files
     outside the predicate envelope keep their add actions (and stats)
     byte-untouched — pinned in ``tests/test_txlog.py`` along with SQL
@@ -676,8 +676,8 @@ def txlog_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     The products tip state is committed range-clustered with per-file
     id stats; the update then (a) prunes non-overlapping files
     DRIVER-SIDE from log metadata, (b) finds the files actually
-    CONTAINING a matching row with one file-bounded
-    distinct-``input_file_name`` scan, and (c) rewrites only those
+    CONTAINING a matching row with one file-bounded grouped scan
+    (``Snapshot.touched``), and (c) rewrites only those
     files with the SET expressions applied to matching rows — every SET
     sees the PRE-update row image (``SET a=b, b=a`` swaps), a NULL
     predicate leaves the row unchanged, a no-match update makes no

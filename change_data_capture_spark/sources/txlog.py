@@ -372,6 +372,34 @@ class Snapshot(NamedTuple):
             df = _project_logical(df, meta, keep=scratch if with_meta else ())
         return df
 
+    def touched(
+        self, hits: DataFrame, files: list[str]
+    ) -> dict[str, tuple[int, str]]:
+        """Touched-file discovery — the one place DML maps matching rows
+        back to the files that hold them. ``hits`` is a frame derived
+        from ``self.scan(spark, files, with_meta=True)`` (filtered or
+        semi-joined down to the matching rows); one grouped job over its
+        ``__txlog_file`` provenance returns ``{path: (n, uri)}`` for each
+        of ``files`` (in order) holding at least one hit: ``n`` is its
+        matching-row count and ``uri`` the verbatim scan URI the
+        deletion-vector sidecar keys its rows by. Provenance comes from
+        the DV-aware, mapping-aware scan, so a row a deletion vector
+        already removed can never touch a file. Cost: per-FILE metadata,
+        bounded by file count."""
+        from pyspark.sql import functions as F
+
+        found = {
+            _local_path(r["__txlog_file"]): (r["__txlog_n"], r["__txlog_file"])
+            for r in hits.groupBy("__txlog_file")
+            .agg(F.count(F.lit(1)).alias("__txlog_n"))
+            .collect()
+        }
+        return {
+            p: found[os.path.abspath(p)]
+            for p in files
+            if os.path.abspath(p) in found
+        }
+
 
 _EMPTY = Snapshot([], {}, None, -1)
 
@@ -686,10 +714,11 @@ def _read_snapshot(
 
 
 def _local_path(p: str) -> str:
-    """Normalize an ``input_file_name()`` value to a comparable local
-    path (strip the ``file:`` scheme, absolutize) — the ONE place this
-    logic lives; touched-file discovery in MERGE/DELETE/UPDATE and the
-    stats keying in :func:`write_files` must agree on it exactly."""
+    """Normalize a scan file URI (``input_file_name()`` /
+    ``_metadata.file_path``) to a comparable local path (strip the
+    ``file:`` scheme, absolutize) — the ONE place this logic lives;
+    touched-file discovery (:meth:`Snapshot.touched`) and the stats
+    keying in :func:`write_files` must agree on it exactly."""
     if p.startswith("file:"):
         p = p[len("file:"):]
     return os.path.abspath(p)
@@ -928,10 +957,11 @@ def merge_into(
 
     1. **Touched-file discovery.** The source's key range prunes the
        snapshot via per-file stats (files that cannot contain a source
-       key are never listed), then one inner join of the surviving
-       files against the broadcast source keys collects the DISTINCT
-       ``input_file_name()`` set — per-FILE metadata, bounded by file
-       count. Files without a match are never rewritten.
+       key are never listed), then one semi join of the surviving
+       files against the broadcast source keys finds the files holding
+       a source key (:meth:`Snapshot.touched`) — per-FILE metadata,
+       bounded by file count. Files without a match are never
+       rewritten.
     2. **Rewrite.** One full-outer join of the touched files' rows with
        the source on ``key``: matched rows take the source image
        (``UPDATE SET *`` — including nulls, which is why this is a
@@ -980,19 +1010,13 @@ def merge_into(
     touched: list[str] = []
     if cand:
         keys = src.select(key).distinct()
-        hit = (
-            # DV-aware scan: a key whose only occurrence is a
-            # merge-on-read-deleted row must NOT touch the file (the key
-            # is absent from the table — it is a plain insert)
-            snap.scan(spark, cand, with_meta=True)
-            .select(F.col(key), F.col("__txlog_file").alias("f"))
-            .join(F.broadcast(keys), key, "left_semi")
-            .select("f")
-            .distinct()
-            .collect()
+        # DV-aware: a key whose only occurrence is a merge-on-read-deleted
+        # row must NOT touch the file (the key is absent from the table —
+        # it is a plain insert)
+        hits = snap.scan(spark, cand, with_meta=True).join(
+            F.broadcast(keys), key, "left_semi"
         )
-        hit_paths = {_local_path(r["f"]) for r in hit}
-        touched = [p for p in cand if os.path.abspath(p) in hit_paths]
+        touched = list(snap.touched(hits, cand))
 
     # Delta MERGE semantics for duplicate source keys: duplicates that
     # match NO target row are plain multi-row inserts (allowed — the
@@ -1126,35 +1150,25 @@ def delete_where(
     if not cand:
         return tip, []
     by_path = {os.path.abspath(_action_path(a)): a for a in snap.actions}
-    # file name projected AT THE SCAN — post-filter provenance IS the
-    # scan row's provenance, same discipline as merge_into; the per-file
-    # match COUNT feeds the DV-vs-rewrite routing below
-    hit = (
-        snap.scan(spark, cand, with_meta=True)
-        .select(
-            F.col("__txlog_file").alias("f"),
-            F.coalesce(F.expr(predicate), F.lit(False)).alias("__del"),
-        )
-        .where(F.col("__del"))
-        .groupBy("f")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
+    # the per-file match COUNT feeds the DV-vs-rewrite routing below
+    found = snap.touched(
+        snap.scan(spark, cand, with_meta=True).where(
+            F.coalesce(F.expr(predicate), F.lit(False))
+        ),
+        cand,
     )
-    matches = {_local_path(r["f"]): r["n"] for r in hit}
-    uri_by_path = {_local_path(r["f"]): r["f"] for r in hit}
-    touched = [p for p in cand if os.path.abspath(p) in matches]
+    touched = list(found)
     if not touched:
         return tip, []  # no matching row anywhere: metadata-only no-op
     dv_class: list[str] = []
     rw_class: list[str] = []
     for p in touched:
-        ap = os.path.abspath(p)
-        a = by_path[ap]
+        a = by_path[os.path.abspath(p)]
         num_rows = a.get("num_rows") if isinstance(a, dict) else None
         if dv_fraction_threshold > 0 and num_rows:
             old_card = ((a.get("dv") or {}).get("cardinality")) or 0
             live = int(num_rows) - int(old_card)
-            if live > 0 and matches[ap] / live <= dv_fraction_threshold:
+            if live > 0 and found[p][0] / live <= dv_fraction_threshold:
                 dv_class.append(p)
                 continue
         rw_class.append(p)
@@ -1173,7 +1187,7 @@ def delete_where(
     if dv_class:
         new_actions.extend(
             _write_deletion_vectors(
-                spark, table_dir, snap, dv_class, predicate, uri_by_path
+                spark, table_dir, snap, dv_class, predicate, found
             )
         )
     version = commit(
@@ -1189,7 +1203,7 @@ def _write_deletion_vectors(
     snap: Snapshot,
     files: list[str],
     predicate: str,
-    uri_by_path: dict[str, str],
+    found: dict[str, tuple[int, str]],
 ) -> list[dict]:
     """Materialize ONE deletion-vector sidecar (parquet dir of
     ``(file, pos)`` rows) for a DELETE's dv-routed files and return
@@ -1212,7 +1226,7 @@ def _write_deletion_vectors(
         F.col("__txlog_file").alias("file"),
         F.col("__txlog_pos").alias("pos"),
     )
-    uris = [uri_by_path[os.path.abspath(p)] for p in files]
+    uris = [found[p][1] for p in files]
     dvs = snap.dvs
     old_dirs = sorted(
         {dvs[ap]["path"] for ap in map(os.path.abspath, files) if ap in dvs}
@@ -1234,7 +1248,7 @@ def _write_deletion_vectors(
     for p in files:
         a = by_path[os.path.abspath(p)]
         new_a = dict(a) if isinstance(a, dict) else {"path": a}
-        card = int(counts.get(uri_by_path[os.path.abspath(p)], 0))
+        card = int(counts.get(found[p][1], 0))
         new_a["dv"] = {"path": out, "cardinality": card}
         acts.append(new_a)
     return acts
@@ -1325,10 +1339,10 @@ def update_where(
 
     1. **Touched-file discovery.** ``prune_range`` skips files whose
        committed stats cannot contain a matching row (driver-side,
-       metadata only); one distributed scan of the survivors collects
-       the DISTINCT ``input_file_name()`` set of files holding at least
-       one row where the predicate is TRUE — per-FILE metadata, bounded
-       by file count.
+       metadata only); one distributed scan of the survivors finds the
+       files holding at least one row where the predicate is TRUE
+       (:meth:`Snapshot.touched`) — per-FILE metadata, bounded by file
+       count.
     2. **Rewrite.** Touched files are rewritten with the SET
        expressions applied to matching rows ONLY (SQL UPDATE
        semantics: a NULL predicate leaves the row unchanged, hence the
@@ -1365,28 +1379,15 @@ def update_where(
             f"table columns are {cols}"
         )
     _check_update_types(frame, set_exprs)
+    cond = F.coalesce(F.expr(predicate), F.lit(False))
     touched: list[str] = []
     if cand:
-        hit = (
-            # DV-aware scan: a predicate matching only merge-on-read-
-            # deleted rows must not touch (or resurrect through) a file
-            snap.scan(spark, cand, with_meta=True)
-            # file name projected AT THE SCAN — post-filter provenance
-            # IS the scan row's provenance, same discipline as merge_into
-            .select(
-                F.col("__txlog_file").alias("f"),
-                F.coalesce(F.expr(predicate), F.lit(False)).alias("__upd"),
-            )
-            .where(F.col("__upd"))
-            .select("f")
-            .distinct()
-            .collect()
-        )
-        hit_paths = {_local_path(r["f"]) for r in hit}
-        touched = [p for p in cand if os.path.abspath(p) in hit_paths]
+        # DV-aware: a predicate matching only merge-on-read-deleted rows
+        # must not touch (or resurrect through) a file
+        hits = snap.scan(spark, cand, with_meta=True).where(cond)
+        touched = list(snap.touched(hits, cand))
     if not touched:
         return tip, []  # no matching row anywhere: metadata-only no-op
-    cond = F.coalesce(F.expr(predicate), F.lit(False))
     tgt = snap.scan(spark, touched)
     # one select over the old row image: all SET expressions (and the
     # predicate) see pre-update values, and each output keeps the

@@ -26,10 +26,11 @@ event log into micro-batches, final state equals the batch
 ``operators.scd2.scd2`` output on the full log.
 
 Transactionality note — hot-path users should prefer the transactional
-composite: ``streaming_queries.streaming_scd2_txlog`` runs this same
-per-key re-chain as a MERGE INTO a txlog-governed table, giving atomic
-commits, txn markers (exactly-once under full checkpoint replay), time
-travel, and stats-pruned touched-file discovery. This module's dynamic
+composite: ``streaming_queries.streaming_scd2_txlog`` calls this
+module's :func:`new_events` and :func:`rechain` (it keeps no copy of the
+re-chain) inside a MERGE-shaped commit to a txlog-governed table, giving
+atomic commits, txn markers (exactly-once under full checkpoint replay),
+time travel, and stats-pruned touched-file discovery. This module's dynamic
 partition swap is NOT transactional: a crash between deleting and
 rewriting a bucket's files leaves a torn window that concurrent readers
 can observe. It remains the right tool for single-writer,
@@ -45,7 +46,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from change_data_capture_spark.operators.scd2 import SENTINEL_TS
+from change_data_capture_spark.operators.scd2 import validity
 
 _PAYLOAD = ("name", "description", "price")
 
@@ -95,48 +96,34 @@ class Scd2State:
         )
 
 
-def _intervals(decoded: DataFrame) -> DataFrame:
+def _intervals(events: DataFrame) -> DataFrame:
     """Chain a (deduped, lsn-ordered) event set into validity intervals."""
     w = Window.partitionBy("id").orderBy("lsn")
-    return decoded.select(
-        "id",
-        *_PAYLOAD,
-        "lsn",
-        F.timestamp_millis(F.col("ts_ms")).alias("row_valid_start_timestamp"),
-        F.coalesce(
-            F.lead(F.timestamp_millis(F.col("ts_ms")), 1).over(w),
-            F.lit(SENTINEL_TS).cast("timestamp"),
-        ).alias("row_valid_expiration_timestamp"),
-    )
+    return events.select("id", *_PAYLOAD, "lsn", *validity(w))
 
 
-def apply_batch(state: Scd2State, batch: DataFrame) -> None:
-    """Merge one micro-batch of decoded CDC events into the SCD2 state,
-    touching only the state buckets that contain the batch's keys."""
-    new_events = (
+def new_events(batch: DataFrame) -> DataFrame:
+    """A micro-batch's decoded events, ready to re-chain: NULL-lsn rows
+    dropped, at-least-once replays of one ``(id, lsn)`` collapsed."""
+    return (
         batch.where(F.col("lsn").isNotNull())
         .dropDuplicates(["id", "lsn"])
         .select("id", *_PAYLOAD, "lsn", "ts_ms")
     )
-    # cheap one-listdir probe — state.read() here would pay a full
-    # file-listing + footer read of the whole state dir every micro-batch
-    # just to learn "initialized: yes"
-    if not state._initialized():
-        state.overwrite_buckets(_intervals(new_events))
-        return
 
-    # buckets hit by this batch (collected: ≤ N_BUCKETS small ints)
-    buckets = [
-        r.b
-        for r in new_events.select(
-            Scd2State.bucket_of(F.col("id")).alias("b")
-        ).distinct().collect()
-    ]
-    affected_state = state.read_buckets(buckets)
-    batch_keys = new_events.select("id").distinct()
 
-    # bucket-mates of the batch keys pass through unchanged; affected keys
-    # re-chain from scratch (state rows become pseudo-events)
+def rechain(affected_state: DataFrame | None, events: DataFrame) -> DataFrame:
+    """The per-batch SCD2 rewrite: the rows that replace
+    ``affected_state`` (state rows that may hold the batch's keys; None
+    when there are none) once ``events`` (from :func:`new_events`) are
+    merged in. Bucket-mates of the batch keys pass through unchanged;
+    affected keys re-chain from scratch — their state rows become
+    pseudo-events carrying their original (lsn, start-ts), and an
+    ``(id, lsn)`` already in state anti-joins out of ``events``, so a
+    re-delivered batch re-chains to the identical result."""
+    if affected_state is None:
+        return _intervals(events)
+    batch_keys = events.select("id").distinct()
     passthrough = affected_state.join(batch_keys, "id", "left_anti")
     pseudo_events = affected_state.join(batch_keys, "id", "left_semi").select(
         "id",
@@ -144,37 +131,28 @@ def apply_batch(state: Scd2State, batch: DataFrame) -> None:
         "lsn",
         F.unix_millis(F.col("row_valid_start_timestamp")).alias("ts_ms"),
     )
-    fresh = new_events.join(
+    fresh = events.join(
         pseudo_events.select("id", "lsn"), ["id", "lsn"], "left_anti"
     )
-    rechained = _intervals(pseudo_events.unionByName(fresh))
-
-    state.overwrite_buckets(passthrough.unionByName(rechained))
+    return passthrough.unionByName(_intervals(pseudo_events.unionByName(fresh)))
 
 
-def run_incremental_scd2(
-    spark: SparkSession,
-    envelope_source_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-) -> DataFrame:
-    """Stream the NDJSON change log and maintain SCD2 incrementally via
-    foreachBatch; returns the final state (drained with availableNow)."""
-    from change_data_capture_spark.functions.envelope import decode_envelope
-    from change_data_capture_spark.sources.ndjson import read_envelope_ndjson
+def apply_batch(state: Scd2State, batch: DataFrame) -> None:
+    """Merge one micro-batch of decoded CDC events into the SCD2 state,
+    touching only the state buckets that contain the batch's keys."""
+    events = new_events(batch)
+    # cheap one-listdir probe — state.read() here would pay a full
+    # file-listing + footer read of the whole state dir every micro-batch
+    # just to learn "initialized: yes"
+    if not state._initialized():
+        state.overwrite_buckets(rechain(None, events))
+        return
 
-    state = Scd2State(spark, state_dir)
-    env = read_envelope_ndjson(spark, envelope_source_dir, streaming=True)
-
-    q = (
-        decode_envelope(env)
-        .writeStream.foreachBatch(lambda bdf, _bid: apply_batch(state, bdf))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = state.read()
-    if final is None:  # explicit, not assert: python -O must not skip it
-        raise RuntimeError("stream produced no batches")
-    return final
+    # buckets hit by this batch (collected: ≤ N_BUCKETS small ints)
+    buckets = [
+        r.b
+        for r in events.select(
+            Scd2State.bucket_of(F.col("id")).alias("b")
+        ).distinct().collect()
+    ]
+    state.overwrite_buckets(rechain(state.read_buckets(buckets), events))

@@ -2475,20 +2475,24 @@ def streaming_scd2_txlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCD2 table fully merged or not at all, and the table's history
     stays time-travelable like any txlog table.
 
-    Per-batch dataflow (the Delta MERGE shape over add/remove actions):
-    stats-envelope prune on the batch's id range → touched-file
-    discovery via one file-bounded semi join → affected keys re-chain
-    from scratch (state rows become pseudo-events, so LATE events
-    splice between closed intervals by LSN, and an (id, lsn) already in
-    state anti-joins out — idempotent below the batch level too) →
-    passthrough ∪ re-chained commits as add+remove. Cost is O(touched
-    files + batch), never O(table)."""
-    import os
-
+    Per-batch dataflow (the Delta MERGE shape over add/remove actions),
+    all answered from ONE fold of the log per micro-batch
+    (``txlog.snapshot``: txn check, tip, candidate files, touched files
+    and the affected-rows read): stats-envelope prune on the batch's id
+    range → touched-file discovery through ``Snapshot.touched`` over a
+    semi join of the DV- and column-mapping-aware ``Snapshot.scan`` →
+    ``scd2_stream.rechain`` (the same re-chain the bucketed store runs:
+    affected keys re-chain from scratch, state rows become pseudo-events,
+    so LATE events splice between closed intervals by LSN, and an (id,
+    lsn) already in state anti-joins out — idempotent below the batch
+    level too) → passthrough ∪ re-chained commits as add+remove. The
+    first batch is the same path with no snapshot: nothing is touched
+    and the commit lands at version 0. Cost is O(touched files +
+    batch), never O(table)."""
     from change_data_capture_spark.functions.envelope import decode_envelope
     from change_data_capture_spark.sources import txlog
     from change_data_capture_spark.sources.ndjson import read_envelope_ndjson
-    from change_data_capture_spark.streaming.scd2_stream import _PAYLOAD, _intervals
+    from change_data_capture_spark.streaming.scd2_stream import new_events, rechain
 
     app = "scd2_txlog_merge"
     ws = tempfile.mkdtemp(prefix="cdc_scd2tx_")
@@ -2501,80 +2505,34 @@ def streaming_scd2_txlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).json(src)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        last = txlog.last_txn(tdir, app)
-        if last is not None and batch_id <= last:
+        snap = txlog.snapshot(tdir) if txlog.latest_version(tdir) >= 0 else None
+        if snap is not None and batch_id <= int(snap.txns.get(app, -1)):
             return  # replayed batch: the txn marker makes it a no-op
-        new_events = (
-            batch_df.where(F.col("lsn").isNotNull())
-            .dropDuplicates(["id", "lsn"])
-            .select("id", *_PAYLOAD, "lsn", "ts_ms")
-        )
-        tip = txlog.latest_version(tdir)
-        if tip < 0:
-            txlog.commit(
-                tdir,
-                add=txlog.write_files(
-                    _intervals(new_events), tdir, stats_cols=["id"]
-                ),
-                expected_version=0,
-                txn={"app_id": app, "batch_id": batch_id},
-            )
-            return
-        # MERGE pass 1: stats prune + touched-file discovery (file-bounded)
-        lo, hi = new_events.agg(F.min("id"), F.max("id")).collect()[0]
-        cand = (
-            txlog.snapshot_files(tdir, tip, predicate_range=("id", lo, hi))
-            if lo is not None
-            else []
-        )
-        batch_keys = new_events.select("id").distinct()
-        touched: list[str] = []
-        if cand:
-            hit = (
-                spark.read.parquet(*cand)
-                .select(F.col("id"), F.input_file_name().alias("f"))
-                .join(F.broadcast(batch_keys), "id", "left_semi")
-                .select("f")
-                .distinct()
-                .collect()
-            )
-            from change_data_capture_spark.sources.txlog import _local_path
-
-            hp = {_local_path(r["f"]) for r in hit}
-            touched = [p for p in cand if os.path.abspath(p) in hp]
-        # MERGE pass 2: re-chain affected keys, pass bucket-mates through
-        if touched:
-            aff = spark.read.parquet(*touched)
-            passthrough = aff.join(batch_keys, "id", "left_anti")
-            pseudo = aff.join(batch_keys, "id", "left_semi").select(
-                "id",
-                *_PAYLOAD,
-                "lsn",
-                F.unix_millis(F.col("row_valid_start_timestamp")).alias("ts_ms"),
-            )
-            fresh = new_events.join(
-                pseudo.select("id", "lsn"), ["id", "lsn"], "left_anti"
-            )
-            out = passthrough.unionByName(
-                _intervals(pseudo.unionByName(fresh))
-            )
-        else:
-            out = _intervals(new_events)
+        events = new_events(batch_df)
+        touched: dict[str, tuple[int, str]] = {}
+        if snap is not None:
+            lo, hi = events.agg(F.min("id"), F.max("id")).collect()[0]
+            cand = snap.files(("id", lo, hi)) if lo is not None else []
+            if cand:
+                keys = events.select("id").distinct()
+                hits = snap.scan(spark, cand, with_meta=True).join(
+                    F.broadcast(keys), "id", "left_semi"
+                )
+                touched = snap.touched(hits, cand)
+        affected = snap.scan(spark, list(touched)) if touched else None
         txlog.commit(
             tdir,
-            add=txlog.write_files(out, tdir, stats_cols=["id"]),
-            remove=touched,
-            expected_version=tip + 1,
+            add=txlog.write_files(
+                rechain(affected, events), tdir, stats_cols=["id"]
+            ),
+            remove=list(touched),
+            expected_version=snap.version + 1 if snap is not None else 0,
             txn={"app_id": app, "batch_id": batch_id},
         )
 
-    env_schema = read_envelope_ndjson(spark, src, streaming=False).schema
-
     def _drain(ckpt: str) -> None:
-        stream = (
-            spark.readStream.schema(env_schema)
-            .option("maxFilesPerTrigger", 2)
-            .json(src)
+        stream = read_envelope_ndjson(
+            spark, src, streaming=True, options={"maxFilesPerTrigger": 2}
         )
         q = (
             decode_envelope(stream)

@@ -29,6 +29,7 @@ from tests.oracle import compare
         "streaming_python_datasource_drain",
         "streaming_anomaly_zscore_ttl",
         "streaming_sink_orc_roundtrip",
+        "streaming_scd2_txlog",
     ],
 )
 def test_streaming_oracle_parity(spark, sf_dir, name):
